@@ -82,11 +82,16 @@ object Domain {
     * price and the 60m-avg OHLCV price exist, their ratio sits in
     * [1e5,1e7] and the token has the 6-decimal exponent, the trades price
     * is a rebasing artifact — scale it down; otherwise prefer trades
-    * price, then OHLCV price, then 0.
+    * price, then OHLCV price, then 0. The ratio's divisor is null unless
+    * positive, so the ratio is null (and the arm not taken) unless both
+    * prices exist and the OHLCV price is positive. A guard ANDed beside
+    * the division would not do: subexpression elimination evaluates a
+    * repeated subexpression (`between` alone repeats the ratio) before the
+    * `&&` short-circuits, and under ANSI a zero divisor then raises
+    * DIVIDE_BY_ZERO.
     */
   def tokenPriceDisp(pPrices: Column, pOhlcv: Column, exponent: Column): Column =
-    when(pPrices.isNotNull && pOhlcv.isNotNull && pOhlcv > 0d &&
-        (pPrices / pOhlcv).between(100000d, 10000000d) &&
+    when((pPrices / when(pOhlcv > 0d, pOhlcv)).between(100000d, 10000000d) &&
         coalesce(exponent, lit(6)) === 6,
       pPrices / 1000000d)
       .when(pPrices.isNotNull, pPrices)

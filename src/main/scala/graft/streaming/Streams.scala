@@ -42,8 +42,9 @@ object Streams {
     * order plays block-height order; the stream's checkpointLocation is
     * the `index_state` twin — restart resumes after the last committed
     * batch, never re-emitting it. The `ts` physical type is probed from
-    * the landing files with a one-off batch read, then normalized to
-    * session-zone TimestampType exactly like the batch path. An empty
+    * the landing files with one driver-side footer read
+    * ([[graft.Tables.parquet]]), then normalized to session-zone
+    * TimestampType exactly like the batch path. An empty
     * (unprobeable) landing dir fails fast unless the caller pins the
     * producer's type via `tsTypeIfEmpty` — the file source fixes its
     * schema at creation, so a wrong guess wedges the stream for life.
@@ -61,7 +62,7 @@ object Streams {
     // Fail fast instead: require one landed file, or an explicit
     // `tsTypeIfEmpty` pin from a caller who knows the producer's type.
     val probed: org.apache.spark.sql.types.DataType =
-      try spark.read.parquet(landingDir).schema("ts").dataType
+      try graft.Tables.parquet(spark, landingDir).schema("ts").dataType
       catch {
         case e: Throwable =>
           tsTypeIfEmpty.getOrElse(throw new IllegalStateException(

@@ -45,6 +45,21 @@ class DomainSpec extends AnyFunSuite {
     got.foreach { case (price, want) => assert(price == want) }
   }
 
+  test("tokenPriceDisp: a zero OHLCV price with the price projected " +
+      "several times raises no DIVIDE_BY_ZERO") {
+    // a11's shape: p2 is a one-day click average that can be exactly 0.0,
+    // and the price feeds three projected columns, so Catalyst shares the
+    // ratio subexpression across them, outside the `pOhlcv > 0` guard
+    val df = Seq((1L, 5.0, 0.0), (2L, 2.0e6, 2.0), (3L, 7.0, -1.0))
+      .toDF("k", "p1", "p2").repartition(1)
+    val price = Domain.tokenPriceDisp(col("p1"), col("p2"), lit(6))
+    val got = df.select(col("k"), price.as("a"), (price * 2d).as("b"),
+        (price * 3d).as("c"))
+      .as[(Long, Double, Double, Double)].collect().sortBy(_._1).toSeq
+    assert(got == Seq((1L, 5.0, 10.0, 15.0), (2L, 2.0, 4.0, 6.0),
+      (3L, 7.0, 14.0, 21.0)))
+  }
+
   test("securityScore: clamping and branch arithmetic") {
     def score(mint: Boolean, cap: Boolean, top10: Double, creator: Double,
               holders: Int, minted: Boolean, days: Double): Int =

@@ -38,6 +38,25 @@ class StreamingSpec extends AnyFunSuite {
     dir
   }
 
+  test("eventsStream on an empty landing dir fails fast unless the ts " +
+      "type is pinned") {
+    val empty = tmpDir("graft-landing-empty")
+    val e = intercept[IllegalStateException](
+      Streams.eventsStream(spark, empty))
+    assert(e.getMessage.contains("cannot probe ts type"))
+    val pinned = Streams.eventsStream(spark, empty,
+      tsTypeIfEmpty = Some(org.apache.spark.sql.types.TimestampNTZType))
+    assert(pinned.isStreaming)
+    assert(pinned.schema("ts").dataType ==
+      org.apache.spark.sql.types.TimestampType)
+    val q = pinned.writeStream
+      .format("memory").queryName("empty_landing_out")
+      .option("checkpointLocation", tmpDir("graft-ckpt-empty"))
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    assert(spark.table("empty_landing_out").count() == 0)
+  }
+
   test("T4: streaming key dedup matches batch distinct") {
     val stream = Streams.dedupeKeys(
       Streams.eventsStream(spark, landing), Seq("user_id", "event_type"))

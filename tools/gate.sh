@@ -17,6 +17,9 @@ OUT=$(mktemp -d /tmp/graft-gate-XXXX)
 echo "== sbt test =="
 sbt -batch test 2>&1 | grep -E "All tests|Passed:|\*\*\*|Failed"
 
+echo "== perfbench statistics tests =="
+python3 -m unittest discover -s perfbench -p 'test_*.py' 2>&1 | tail -3
+
 echo "== Verify @$SF =="
 # `|| true` only on the grep (no [verify] failure lines is the GOOD
 # case and grep exits 1 on zero matches); the sbt exit itself still
